@@ -3,12 +3,19 @@
 Query plan (SURVEY.md §3.3):
 
 1. tokenize the query with the document analyzer;
-2. read ``term_stats`` filtered to the query terms (broadcast-sized: ≤|q|
-   rows) → idf per term, with N/avgdl from ``stats.json``;
+2. no driver-side statistics read: every resident segment row carries its
+   term's global df (``df_term``, joined once from the summed
+   ``term_stats`` partials when the Searcher opens), so each doc-range
+   task derives idf for the terms it holds, with N/avgdl from
+   ``stats.json``. The resident segment and range-dl relations are
+   hash-partitioned by ``seg``, so the per-range group needs no Exchange —
+   a top-k query is one Spark job;
 3. read posting segments with ``term IN qterms AND bucket IN qbuckets`` —
-   both predicates push into the parquet scan (bucket prunes row groups of
-   other term-hash buckets; the files are sorted by term within buckets so
-   min/max stats prune precisely);
+   uncached, both predicates push into the parquet scan (bucket prunes
+   row groups of other term-hash buckets; the files are sorted by term
+   within buckets so min/max stats prune precisely); resident, the rows
+   are term-sorted within each partition, so the cached batches' min/max
+   stats prune the same way;
 4. group segments by ``seg`` (doc range): every doc lives in exactly one
    range, so per-range top-k followed by a global TakeOrdered(k) is the
    EXACT global top-k — ranges score in parallel with no cross-talk;
@@ -23,6 +30,7 @@ exhaustive numpy oracle produce bit-identical float64 scores.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import os
 
@@ -55,6 +63,64 @@ def _contrib(tfs: np.ndarray, dls: np.ndarray, w: float, avgdl: float,
     return w * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
+def _gather_dls(ids: np.ndarray, dl_base: int, dl_arr: np.ndarray) -> np.ndarray:
+    """dl of each posting id from its range's dl array (the norms gather,
+    ``dl_arr[id - dl_base]``). Fancy indexing would silently gather WRONG
+    dls for any id outside [dl_base, dl_base + len): negative offsets
+    wrap — exactly the silent-corruption mode of a truncated or
+    mixed-layout docmap/range_dls (ADVICE r3 #3). Validate hard."""
+    if ids.size:
+        lo, hi = int(ids.min()), int(ids.max())
+        if lo < dl_base or hi >= dl_base + dl_arr.size:
+            raise ValueError(
+                f"posting doc ids [{lo}, {hi}] fall outside the range-dl "
+                f"array [{dl_base}, {dl_base + dl_arr.size}): docmap/range_dls "
+                "rows are missing for this doc range (corrupt or mixed-layout "
+                "index)"
+            )
+    return dl_arr[ids - dl_base]
+
+
+def _range_dls(key, dpdf: pd.DataFrame) -> tuple[int, np.ndarray]:
+    """Decode one seg's range-dl rows → (dl_base, dl_arr). Postings exist
+    for the range (callers check), so no dl rows is never a legal state
+    (dls derive from the same docmap): returning empty would silently
+    drop the range's docs (ADVICE r3 #3)."""
+    if len(dpdf) == 0:
+        raise ValueError(
+            f"seg {key} has postings but no range-dl rows — "
+            "corrupt or mixed-layout index"
+        )
+    return decode_range_dls(dpdf.to_dict("records"))
+
+
+def _rows_by_term(pdf: pd.DataFrame) -> dict[str, list[dict]]:
+    by_term: dict[str, list[dict]] = {}
+    for r in pdf.to_dict("records"):
+        by_term.setdefault(r["term"], []).append(r)
+    return by_term
+
+
+def _range_weights(by_term: dict[str, list[dict]], terms, n_docs: int,
+                   boosts: dict[str, float] | None = None) -> dict[str, float]:
+    """idf × boost of each of ``terms`` held by this doc range, from the
+    global df its segment rows carry (``df_term``): every row of a term
+    carries the same df, so every range derives the same weight."""
+    return {
+        t: idf(n_docs, int(by_term[t][0]["df_term"]))
+        * float((boosts or {}).get(t, 1.0))
+        for t in terms
+        if t in by_term
+    }
+
+
+def _empty_scores() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"doc_id": pd.Series(dtype=np.int64),
+         "score": pd.Series(dtype=np.float64)}
+    )
+
+
 class _Cursor:
     """One query term's postings within a doc range (possibly several
     segment rows from different shards/epochs, concatenated in doc order).
@@ -80,21 +146,7 @@ class _Cursor:
             tf_l.append(tfs)
         self.ids = np.concatenate(ids_l)
         tfs = np.concatenate(tf_l)
-        # fancy indexing would silently gather WRONG dls for any id outside
-        # [dl_base, dl_base + len): negative offsets wrap, positives past the
-        # end only sometimes raise — exactly the silent-corruption mode of a
-        # mixed docmap/range_dls layout (ADVICE r3 #3). Validate hard.
-        if self.ids.size and (
-            int(self.ids[0]) < dl_base
-            or int(self.ids[-1]) >= dl_base + dl_arr.size
-        ):
-            raise ValueError(
-                f"posting doc ids [{int(self.ids[0])}, {int(self.ids[-1])}] "
-                f"fall outside the range-dl array [{dl_base}, "
-                f"{dl_base + dl_arr.size}): docmap/range_dls rows are missing "
-                "for this doc range (corrupt or mixed-layout index)"
-            )
-        dls = dl_arr[self.ids - dl_base]
+        dls = _gather_dls(self.ids, dl_base, dl_arr)
         self.contrib = _contrib(tfs, dls, w, avgdl, k1, b)
         last, maxtf, mindl = block_meta(self.ids, tfs, dls)
         self.blk_last = last
@@ -413,9 +465,24 @@ def cursor_range_topk(
 
 class Searcher:
     """Query engine over an index dataset. Loads stats once and keeps the
-    (small) segment-row and term-stats relations persisted so repeated
-    queries pay only the scoring job — the amortization a serving engine
-    does with its open index readers. One-shot use: ``wand_topk``."""
+    (small) segment-row, range-dl and term-stats relations persisted so
+    repeated queries pay only the scoring job — the amortization a serving
+    engine does with its open index readers. One-shot use: ``wand_topk``.
+
+    Serving layout of the resident relations:
+
+    * every segment row carries its term's global df (``df_term``, the
+      summed ``term_stats`` partials, joined once), so the per-range
+      kernels derive idf from their own rows — no driver-side term_stats
+      collect per query; a term absent from the index simply has no rows
+      (AND / min_should_match early-outs are the per-range skips);
+    * segment rows and range-dl rows are hash-partitioned by ``seg`` into
+      the session's ``spark.sql.shuffle.partitions``, so the per-range
+      cogroup/groupBy finds its distribution already satisfied and plans
+      no Exchange (a ``REPARTITION_BY_NUM`` is never coalesced by AQE).
+
+    ``cache=False`` builds the same relations without persisting them:
+    the df join and the repartition then run inside each query."""
 
     def __init__(self, spark: SparkSession, index_dir: str, cache: bool = True):
         from kafka_es_spark.operators.compaction import recover_swap_dirs
@@ -457,7 +524,6 @@ class Searcher:
             if st.get("bucket_scheme") == BUCKET_SCHEME
             else None
         )
-        self.segs = spark.read.parquet(os.path.join(index_dir, "postings"))
         # term_stats holds PARTIALS (unit=base + one per streaming epoch;
         # doc sets are disjoint so df/cf sum exactly) — aggregate per term
         self.term_stats = (
@@ -465,12 +531,28 @@ class Searcher:
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         )
-        # the norms analogue: tiny (1-2 bytes/doc), resident while serving
-        self.range_dls = spark.read.parquet(os.path.join(index_dir, "range_dls"))
         self._cached = cache
         if cache:
-            self.segs = self.segs.persist()
             self.term_stats = self.term_stats.persist()
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self.segs = (
+            spark.read.parquet(os.path.join(index_dir, "postings"))
+            .join(
+                self.term_stats.select("term", F.col("df").alias("df_term")),
+                "term",
+            )
+            .repartition(n_part, "seg")
+            # term-sorted within each partition, so the resident scan's
+            # per-batch min/max stats still prune `term IN (...)` as the
+            # term-sorted postings files did before the repartition
+            .sortWithinPartitions("term")
+        )
+        # the norms analogue: tiny (1-2 bytes/doc), resident while serving
+        self.range_dls = spark.read.parquet(
+            os.path.join(index_dir, "range_dls")
+        ).repartition(n_part, "seg")
+        if cache:
+            self.segs = self.segs.persist()
             self.range_dls = self.range_dls.persist()
 
     def _query_segs(self, terms) -> DataFrame:
@@ -485,6 +567,13 @@ class Searcher:
             bs = sorted({hash32_py(t) % self.n_term_buckets for t in terms})
             segs = segs.filter(F.col("bucket").isin(bs))
         return segs
+
+    @functools.cached_property
+    def _docmap(self) -> DataFrame:
+        """The docmap relation, read (file listing + schema) once per
+        Searcher on first use — a point-in-time reader like the resident
+        relations — so the hit-set joins run no schema-read job per query."""
+        return self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
 
     def close(self) -> None:
         if self._cached:
@@ -550,8 +639,9 @@ class Searcher:
         match_all scorer by design (it would be a full corpus scan).
 
         ``boosts`` (ES ``term^boost``): per-term query-time weight
-        multipliers applied to the idf — driver arithmetic only, every
-        scorer and its block-max bounds inherit the scaled weight.
+        multipliers applied to the idf where each range derives its
+        weights — every scorer and its block-max bounds inherit the scaled
+        weight.
 
         exclude_doc_ids / exclude_urls (a DataFrame with a ``url`` column)
         are X9 delete tombstones, enforced INSIDE the scorer (skipped at
@@ -587,62 +677,34 @@ class Searcher:
                 )
             return spark.createDataFrame([], TOPK_SCHEMA)
 
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        # query-time boosts (ES term ^boost): scale the term weight —
-        # pure driver arithmetic, the scorers are boost-agnostic
-        weights = {
-            r["term"]: idf(self.n_docs, int(r["df"]))
-            * float((boosts or {}).get(r["term"], 1.0))
-            for r in ts
-        }
-        if not weights:
-            return spark.createDataFrame([], TOPK_SCHEMA)
-        if mode == "and" and len(weights) < len(qterms):
-            # a required term has no postings anywhere — no doc can match
-            return spark.createDataFrame([], TOPK_SCHEMA)
         msm = min_should_match
         if msm is not None and (msm < 1 or mode == "and"):
             raise ValueError(
                 "min_should_match must be >= 1 and combines with mode='or' "
                 "(mode='and' IS min_should_match=#terms)"
             )
-        if msm is not None and len(weights) < msm:
-            # fewer terms exist in the index than the match floor requires
-            return spark.createDataFrame([], TOPK_SCHEMA)
-        term_order = sorted(weights)
-        avgdl, codec = self.avgdl, self.codec
+        n_docs, avgdl, codec = self.n_docs, self.avgdl, self.codec
 
-        segs = self._query_segs(sorted(set(weights) | set(neg_terms)))
+        segs = self._query_segs(sorted(set(qterms) | set(neg_terms)))
         dls_rel = self._query_dls(segs)
 
         def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
             if len(pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
-                )
-            if len(dpdf) == 0:
-                # postings exist for this doc range but no dl rows — never a
-                # legal state (dls derive from the same docmap); returning
-                # empty would silently drop the range's docs (ADVICE r3 #3)
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
-            n_pos = sum(1 for t in term_order if t in by_term)
-            if (mode == "and" and n_pos < len(term_order)) or (
+                return _empty_scores()
+            dl_base, dl_arr = _range_dls(key, dpdf)
+            by_term = _rows_by_term(pdf)
+            # query-time boosts (ES term ^boost) scale the term weight; the
+            # scorers are boost-agnostic
+            weights = _range_weights(by_term, qterms, n_docs, boosts)
+            n_pos = len(weights)
+            if (mode == "and" and n_pos < len(qterms)) or (
                 msm is not None and n_pos < msm
             ) or n_pos == 0:
-                # this doc range can't host a qualifying doc — skip
-                # without decoding anything
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
-                )
+                # this doc range can't host a qualifying doc (a required
+                # term absent here — or from the whole index — or fewer
+                # present terms than the match floor) — skip without
+                # decoding anything
+                return _empty_scores()
             range_excluded = excluded
             if neg_terms:
                 neg_ids = [
@@ -655,9 +717,8 @@ class Searcher:
                         int(d) for d in np.concatenate(neg_ids)
                     )
             cursors = [
-                _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
-                for t in term_order
-                if t in by_term
+                _Cursor(by_term[t], w, avgdl, codec, dl_base, dl_arr)
+                for t, w in weights.items()
             ]
             if mode == "and":
                 top = conjunctive_range_topk(cursors, k, excluded=range_excluded)
@@ -836,38 +897,20 @@ class Searcher:
                 "min_should_match must be >= 1 and combines with mode='or' "
                 "(mode='and' IS min_should_match=#terms)"
             )
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
-        if not weights or (mode == "and" and len(weights) < len(qterms)) or (
-            msm is not None and len(weights) < msm
-        ):
-            return spark.createDataFrame([], TOPK_SCHEMA)
         need = msm if msm is not None else (len(qterms) if mode == "and" else 1)
-        term_order = sorted(weights)
-        avgdl, codec = self.avgdl, self.codec
+        n_docs, avgdl, codec = self.n_docs, self.avgdl, self.codec
         excluded = self.persistent_excluded or None
-        segs = self._query_segs(sorted(set(weights) | set(neg_terms)))
+        segs = self._query_segs(sorted(set(qterms) | set(neg_terms)))
         dls_rel = self._query_dls(segs)
 
         def score_range(key: tuple, pdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
             if len(pdf) == 0:
-                return empty
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
-            n_pos = sum(1 for t in term_order if t in by_term)
-            if n_pos < need or n_pos == 0:
-                return empty
+                return _empty_scores()
+            dl_base, dl_arr = _range_dls(key, dpdf)
+            by_term = _rows_by_term(pdf)
+            weights = _range_weights(by_term, qterms, n_docs)
+            if len(weights) < need:
+                return _empty_scores()
             range_excluded = excluded
             if neg_terms:
                 neg_ids = [
@@ -880,9 +923,8 @@ class Searcher:
                         int(d) for d in np.concatenate(neg_ids)
                     )
             cursors = [
-                _Cursor(by_term[t], weights[t], avgdl, codec, dl_base, dl_arr)
-                for t in term_order
-                if t in by_term
+                _Cursor(by_term[t], w, avgdl, codec, dl_base, dl_arr)
+                for t, w in weights.items()
             ]
             top = cursor_range_topk(
                 cursors, k, need, round_to, after, excluded=range_excluded
@@ -935,23 +977,17 @@ class Searcher:
                 "min_should_match must be >= 1 and combines with mode='or' "
                 "(mode='and' IS min_should_match=#terms)"
             )
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        present = sorted(r["term"] for r in ts)
-        if not present or (mode == "and" and len(present) < len(qterms)) or (
-            msm is not None and len(present) < msm
-        ):
-            return spark.createDataFrame([], out_schema)
         codec = self.codec
         excluded = self.persistent_excluded or None
-        need = msm if msm is not None else (len(present) if mode == "and" else 1)
+        need = msm if msm is not None else (len(qterms) if mode == "and" else 1)
 
-        segs = self._query_segs(sorted(set(present) | set(neg_terms)))
+        segs = self._query_segs(sorted(set(qterms) | set(neg_terms)))
 
         def collect_range(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
-            pos = [t for t in present if t in by_term]
+            by_term = _rows_by_term(pdf)
+            pos = [t for t in qterms if t in by_term]
+            # a term absent from the index has no rows anywhere, so AND with
+            # it (or a match floor above the present terms) skips every range
             if len(pos) < need:
                 return pd.DataFrame({"doc_id": pd.Series(dtype=np.int64)})
             # one id array per positive term (a term's segments within the
@@ -1113,7 +1149,7 @@ class Searcher:
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
+        dm = self._docmap
         if field_values is None:
             if field not in dm.columns:
                 raise ValueError(
@@ -1738,11 +1774,7 @@ class Searcher:
         empty = "doc_id long, score double"
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], empty)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
-        if not weights:
-            return spark.createDataFrame([], empty)
-        segs = self._query_segs(list(weights))
+        segs = self._query_segs(qterms)
         # One seg-cogroup instead of the old postings⨝dl doc_id shuffle join
         # + hash aggregation (3 Exchanges → 0): postings and range-dls are
         # both seg-organized, a doc lives in exactly ONE range, so per-range
@@ -1753,30 +1785,21 @@ class Searcher:
         # op-for-op (same IEEE doubles); the per-doc sum order is now
         # deterministic (term-lex) where the hash-agg order was not.
         dls_rel = self._query_dls(segs)
-        avgdl, codec = self.avgdl, self.codec
-        wmap = {t: float(w) for t, w in weights.items()}
+        n_docs, avgdl, codec = self.n_docs, self.avgdl, self.codec
         excluded = self.persistent_excluded or None
 
         def score_range(key, pdf, dpdf):
             if len(pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
-                )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+                return _empty_scores()
+            dl_base, dl_arr = _range_dls(key, dpdf)
             rows = pdf.to_dict("records")
             rows.sort(key=lambda r: r["term"])
             ids_l, con_l = [], []
             for r in rows:
                 ids, tfs = decode_segment(r, codec)
-                w = wmap[r["term"]]
+                w = idf(n_docs, int(r["df_term"]))
                 tf = tfs.astype(np.float64)
-                dl = dl_arr[ids - dl_base].astype(np.float64)
+                dl = _gather_dls(ids, dl_base, dl_arr).astype(np.float64)
                 con = (w * tf) * (K1 + 1.0) / (
                     tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
                 )
@@ -1862,17 +1885,11 @@ class Searcher:
         qterms = sorted(set(tokenize_py(query)))
         if not qterms or self.n_docs == 0 or self.avgdl == 0:
             return spark.createDataFrame([], TOPK_SCHEMA)
-        ts = self.term_stats.filter(F.col("term").isin(qterms)).collect()
-        weights = {r["term"]: idf(self.n_docs, int(r["df"])) for r in ts}
-        if not weights or (mode == "and" and len(weights) < len(qterms)):
-            return spark.createDataFrame([], TOPK_SCHEMA)
         hits = self.matching_doc_ids(
             query, mode=mode, min_should_match=min_should_match,
             must_not=must_not,
         )
-        dm = spark.read.parquet(os.path.join(self.index_dir, "docmap")).select(
-            "doc_id", "url"
-        )
+        dm = self._docmap.select("doc_id", "url")
         allowed = (
             hits.join(dm, "doc_id")
             .join(field_values.select("url", field), "url")
@@ -2936,12 +2953,7 @@ class Searcher:
                      "score": pd.Series(dtype=np.float64),
                      "_matched": pd.Series(dtype=np.int64)}
                 )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+            dl_base, dl_arr = _range_dls(key, dpdf)
             rows = pdf.to_dict("records")
             rows.sort(key=lambda r: r["term"])
             ids_l, con_l = [], []
@@ -2949,7 +2961,7 @@ class Searcher:
                 ids, tfs = decode_segment(r, codec)
                 w = wmap[r["term"]]
                 tf = tfs.astype(np.float64)
-                dl = dl_arr[ids - dl_base].astype(np.float64)
+                dl = _gather_dls(ids, dl_base, dl_arr).astype(np.float64)
                 con = (w * tf) * (K1 + 1.0) / (
                     tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
                 )
@@ -3086,16 +3098,8 @@ class Searcher:
 
         def score_range(key, pdf, dpdf):
             if len(pdf) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype=np.int64),
-                     "score": pd.Series(dtype=np.float64)}
-                )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+                return _empty_scores()
+            dl_base, dl_arr = _range_dls(key, dpdf)
             ids_l, tf_l = [], []
             for r in pdf.to_dict("records"):
                 ids, tfs = decode_segment(r, codec)
@@ -3111,7 +3115,7 @@ class Searcher:
             )
             uids = ids_s[starts]
             tfp = np.add.reduceat(tf_s, starts).astype(np.float64)
-            dl = dl_arr[uids - dl_base].astype(np.float64)
+            dl = _gather_dls(uids, dl_base, dl_arr).astype(np.float64)
             sc = (wf * tfp) * (K1 + 1.0) / (
                 tfp + K1 * ((1.0 - B) + (B * dl) / avgdl)
             )
@@ -3286,34 +3290,30 @@ class Searcher:
         grp_names = sorted(weights)
         gidx = {g: i for i, g in enumerate(grp_names)}
         warr_py = [float(weights[g]) for g in grp_names]
-        term2g = {m: gidx[g] for m, g in member_rows}
+        # a term may belong to several groups ({"join": ["merge"]} with
+        # "merge" also queried): its postings count once in EACH group
+        term2g: dict[str, list[int]] = {}
+        for m, g in member_rows:
+            term2g.setdefault(m, []).append(gidx[g])
         avgdl, codec = self.avgdl, self.codec
 
         def score_range(key, pdf, dpdf):
-            empty_pdf = pd.DataFrame(
-                {"doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
             if len(pdf) == 0:
-                return empty_pdf
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
+                return _empty_scores()
+            dl_base, dl_arr = _range_dls(key, dpdf)
             warr = np.asarray(warr_py, dtype=np.float64)
             ids_l, tf_l, g_l = [], [], []
             for r in pdf.to_dict("records"):
-                g = term2g.get(r["term"])
-                if g is None:  # not a member term (defensive; segs pruned)
+                gs = term2g.get(r["term"])
+                if gs is None:  # not a member term (defensive; segs pruned)
                     continue
                 ids, tfs = decode_segment(r, codec)
-                ids_l.append(ids)
-                tf_l.append(tfs.astype(np.int64))
-                g_l.append(np.full(ids.size, g, dtype=np.int64))
+                for g in gs:
+                    ids_l.append(ids)
+                    tf_l.append(tfs.astype(np.int64))
+                    g_l.append(np.full(ids.size, g, dtype=np.int64))
             if not ids_l:
-                return empty_pdf
+                return _empty_scores()
             ids_all = np.concatenate(ids_l)
             tf_all = np.concatenate(tf_l)
             g_all = np.concatenate(g_l)
@@ -3328,7 +3328,7 @@ class Searcher:
             p_ids = ids_s[pstarts]
             p_g = g_s[pstarts]
             p_tf = np.add.reduceat(tf_s, pstarts).astype(np.float64)
-            dl = dl_arr[p_ids - dl_base].astype(np.float64)
+            dl = _gather_dls(p_ids, dl_base, dl_arr).astype(np.float64)
             wv = warr[p_g]
             con = (wv * p_tf) * (K1 + 1.0) / (
                 p_tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
@@ -5013,15 +5013,8 @@ class Searcher:
                      "doc_id": pd.Series(dtype=np.int64),
                      "score": pd.Series(dtype=np.float64)}
                 )
-            if len(dpdf) == 0:
-                raise ValueError(
-                    f"seg {key} has postings but no range-dl rows — "
-                    "corrupt or mixed-layout index"
-                )
-            dl_base, dl_arr = decode_range_dls(dpdf.to_dict("records"))
-            by_term: dict[str, list[dict]] = {}
-            for r in pdf.to_dict("records"):
-                by_term.setdefault(r["term"], []).append(r)
+            dl_base, dl_arr = _range_dls(key, dpdf)
+            by_term = _rows_by_term(pdf)
             cursors = {
                 t: _Cursor(rows, weights[t], avgdl, codec, dl_base, dl_arr)
                 for t, rows in by_term.items()
@@ -5410,9 +5403,11 @@ def exhaustive_topk_numpy(
     k: int = 10,
     k1: float = K1,
     b: float = B,
+    boosts: dict[str, float] | None = None,
 ) -> list[tuple[int, float]]:
     """Brute-force BM25 over a pandas (doc_id, terms:list[str]) frame; sums
-    per-term contributions in sorted-term order (same as WAND)."""
+    per-term contributions in sorted-term order (same as WAND). ``boosts``
+    scales a term's idf exactly as ``Searcher.topk(boosts=...)`` does."""
     qs = sorted(set(query_terms))
     n = len(doc_terms)
     dls = doc_terms["terms"].map(len).to_numpy(dtype=np.int64)
@@ -5426,7 +5421,7 @@ def exhaustive_topk_numpy(
         df = int((tf > 0).sum())
         if df == 0:
             continue
-        w = idf(n, df)
+        w = idf(n, df) * float((boosts or {}).get(q, 1.0))
         mask = tf > 0
         scores[mask] += _contrib(tf[mask], dls[mask], w, avgdl, k1, b)
     hit = scores > 0

@@ -102,13 +102,11 @@ def test_span_or_matches_join_formulation(spark, searcher):
     assert _rows(old) and _rows(got) == _rows(old)
 
 
-def test_synonym_matches_join_formulation(spark, searcher):
+def _check_synonym_against_join(spark, s, query, syns):
     """synonym_topk via the cogroup kernel == the old two-level
-    (doc, grp) roll-up join shape, incl. a group member absent from
-    the index."""
-    s = searcher
-    syns = {"join": ["merge"], "query": ["scan", "zzznotindexed"]}
-    qterms = sorted({"join", "query", "data"})
+    (doc, grp) roll-up join shape (the broadcast group map emits one
+    row per (member, group) pair)."""
+    qterms = sorted(set(query.split()))
     groups = {t: sorted({t} | set(syns.get(t, ()))) for t in qterms}
     all_terms = sorted({m for ms in groups.values() for m in ms})
     tsd = {
@@ -141,8 +139,24 @@ def test_synonym_matches_join_formulation(spark, searcher):
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(25)
     )
-    got = s.synonym_topk("join query data", syns, k=25)
+    got = s.synonym_topk(query, syns, k=25)
     assert _rows(old) and _rows(got) == _rows(old)
+
+
+def test_synonym_matches_join_formulation(spark, searcher):
+    """Disjoint groups, incl. a group member absent from the index."""
+    _check_synonym_against_join(
+        spark, searcher, "join query data",
+        {"join": ["merge"], "query": ["scan", "zzznotindexed"]},
+    )
+
+
+def test_synonym_overlapping_groups_match_join_formulation(spark, searcher):
+    """The term "merge" belongs to two groups (its own and "join"'s): its
+    postings count in both, as the join formulation's group map has it."""
+    _check_synonym_against_join(
+        spark, searcher, "join merge", {"join": ["merge"]}
+    )
 
 
 def test_range_filtered_matches_hit_scores(spark, searcher, docfields):
